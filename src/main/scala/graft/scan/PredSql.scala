@@ -119,6 +119,12 @@ object PredSql {
     case Not(IsNaN(a)) => attr(a).map(NotNan.apply).getOrElse(Opaque(e.sql))
     case UnresolvedFunction(parts, Seq(a), _, _, _, _, _) if parts.mkString(".") == "isnan" =>
       attr(a).map(IsNan.apply).getOrElse(Opaque(e.sql))
+    // the parser leaves `a BETWEEN lo AND hi` an unresolved function; it
+    // means lo <= a AND a <= hi (NOT BETWEEN negates through the Not case)
+    case UnresolvedFunction(parts, Seq(a, lo, hi), _, _, _, _, _)
+        if parts.mkString(".").equalsIgnoreCase("between") =>
+      convert(org.apache.spark.sql.catalyst.expressions.And(
+        GreaterThanOrEqual(a, lo), LessThanOrEqual(a, hi)))
     case a: UnresolvedAttribute => Eq(a.name, true) // bare boolean column
     case other => Opaque(other.sql)
   }

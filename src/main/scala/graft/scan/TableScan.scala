@@ -26,7 +26,8 @@ final class TableScan(
     allowFullTableScan: Boolean = true,
     sizeLimitMiB: Option[Long] = None,
     withFileColumns: Boolean = false,
-    // DML rebuild path: scan exactly these files (no pruning, no residual)
+    // scan exactly these files, unpruned (DML rebuilds); a non-true
+    // `pred` still filters their rows as the residual (see toDF)
     explicitFiles: Option[Seq[FileEntry]] = None) {
 
   val FileCol = "_file"

@@ -2,6 +2,7 @@ package graft.sqlext
 
 import graft.format.{LakeCatalog, LakeTable, TableRef, ValidationException}
 import graft.scan.TableScan
+import graft.streaming.{LakeDsv2, LakeDsv2Table}
 import java.nio.file.Paths
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -9,22 +10,34 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.{AddColumns, AlterColumns, Assignment, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DropColumns, DropTable, InsertAction, InsertIntoStatement, InsertStarAction, LocalRelation, LogicalPlan, MergeIntoTable, RenameColumn, SetTableProperties, SubqueryAlias, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import scala.jdk.CollectionConverters._
 
 /** SQL-transparent lake tables (SURVEY §4 tail / §7.1.6): one analyzer
   * rule replaces the reference's 1,672-LoC JSQLParser rewriting engine
   * (sql/SqlQueryProcessor.java). With the extension installed and
   * `spark.graft.warehouse` set,
   *
-  *   SELECT * FROM lake.orders
+  *   SELECT * FROM lake.orders WHERE o_orderkey BETWEEN 10 AND 20
   *   SELECT * FROM lake.`orders$snapshot_3`
   *   SELECT * FROM lake.`orders$timestamp_1722470400000`
   *   SELECT * FROM lake.`orders$branch_dev` / lake.`orders$tag_v1`
-  *   SELECT * FROM lake.`orders$snapshots` / `orders$files` / `orders$history`
   *
-  * resolve to pruning [[TableScan]] plans, time travel included
-  * (reference suffix grammar: SqlQueryProcessor.java:371-402), plus
-  * Iceberg-style metadata introspection relations.
+  * resolve to the `graft-lake` DSv2 relation ([[LakeDsv2Table]]), the
+  * same batch read as `spark.read.format("graft-lake")`, with the ref
+  * suffix passed as its time-travel option (reference suffix grammar:
+  * SqlQueryProcessor.java:371-402). Analysis only loads table metadata;
+  * the WHERE clause pushes into the relation's scan, which prunes files
+  * through [[TableScan.planFiles]] when the query is physically planned
+  * and hands the filters to the parquet reader for row-group skipping.
+  *
+  *   SELECT * FROM lake.`orders$snapshots` / `orders$files` / `orders$history`
+  *   SELECT * FROM lake.`orders$partitions` / lake.`orders$changes_3`
+  *
+  * resolve to Iceberg-style metadata introspection relations and to the
+  * file-level change feed since a snapshot.
   *
   * SQL DML routes to the engine's copy-on-write commands:
   *
@@ -346,7 +359,6 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
       val names =
         if (!java.nio.file.Files.isDirectory(dir)) Seq.empty[String]
         else {
-          import scala.jdk.CollectionConverters._
           java.nio.file.Files.list(dir).iterator().asScala
             .filter(p => LakeTable.exists(p.toString))
             .map(_.getFileName.toString).toSeq.sorted
@@ -578,8 +590,12 @@ class ResolveLakeRelations(spark: SparkSession) extends Rule[LogicalPlan] {
         new LakeCatalog(Paths.get(location).getParent.toString))
       Some(engine.readChanges(table, Some(fromId)).queryExecution.analyzed)
     } else {
+      // the graft-lake batch relation: filters, columns, aggregates and
+      // limits push into its scan during optimization, so files are
+      // pruned and listed only when the query is physically planned
       val (_, ref) = parseRef(spec)
-      Some(new TableScan(spark, table, ref = ref).toDF().queryExecution.analyzed)
+      Some(DataSourceV2Relation.create(new LakeDsv2Table(location, loaded = Some(table)),
+        None, None, new CaseInsensitiveStringMap(LakeDsv2.refOptions(ref).asJava)))
     }
   }
 

@@ -14,8 +14,8 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{Metadata, StructType}
+import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, Metadata, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Lake tables as a DataSource V2 connector — a MicroBatchStream SOURCE
@@ -41,8 +41,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * live in Spark's namespace and no v1 `Source` shim is needed.
   *
   * Usage: `spark.readStream.format("graft-lake").option("path", loc).load()`
-  * (and `spark.read.format("graft-lake")` for a full-table batch read;
-  * [[graft.scan.TableScan]] remains the pruning batch read path).
+  * for a stream; `spark.read.format("graft-lake")` and SQL over
+  * `lake.<t>` (which resolves to this connector's relation) share one
+  * batch read path, [[LakeScan]]: pushed filters prune files through
+  * [[graft.scan.TableScan.planFiles]] and skip row groups in the parquet
+  * reader, and columns, aggregates, runtime filters and limits push down.
   */
 class LakeSourceProvider extends TableProvider with DataSourceRegister
     with org.apache.spark.sql.sources.StreamSinkProvider {
@@ -113,7 +116,7 @@ class LakeSourceProvider extends TableProvider with DataSourceRegister
   }
 }
 
-private[streaming] object LakeDsv2 {
+private[graft] object LakeDsv2 {
   val ChangeTypeCol = "_change_type"
   val CommitSnapshotCol = "_commit_snapshot_id"
 
@@ -162,6 +165,18 @@ private[streaming] object LakeDsv2 {
       .getOrElse(TableRef.Head)
   }
 
+  /** The read options [[refOf]] maps back to `ref`. */
+  def refOptions(ref: graft.format.TableRef): Map[String, String] = {
+    import graft.format.TableRef
+    ref match {
+      case TableRef.Head => Map.empty
+      case TableRef.SnapshotId(id) => Map("snapshot-id" -> id.toString)
+      case TableRef.AsOfTimestamp(ms) => Map("timestamp" -> ms.toString)
+      case TableRef.Branch(b) => Map("branch" -> b)
+      case TableRef.Tag(t) => Map("tag" -> t)
+    }
+  }
+
   /** DSv2 source filter -> pruning predicate. Unconvertible filters map
     * to None and simply don't prune (Spark re-evaluates every filter on
     * the returned rows, so pushdown here is pruning-only and always
@@ -201,6 +216,18 @@ private[streaming] object LakeDsv2 {
   def clean(s: StructType): StructType =
     StructType(s.fields.map(f => f.copy(metadata = Metadata.empty)))
 
+  /** `dt` nullable at every level, as Spark's file sources declare what
+    * they read: a column written NOT NULL still reads NULL from a file
+    * written before it existed or by an INSERT that omitted it, and a
+    * non-nullable declaration would turn that NULL into a zero. */
+  def asNullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(asNullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(asNullable(k), asNullable(v), valueContainsNull = true)
+    case other => other
+  }
+
   /** Plan `files` through Spark's parquet reader: one ParquetScanBuilder
     * per written-schema group (partition inference suppressed — the lake
     * layout's hive-style dirs are NOT DSv2 partition columns), partitions
@@ -230,12 +257,33 @@ private[streaming] object LakeDsv2 {
       ids.contains(graft.format.FieldIds.of(f))))
   }
 
+  /** `filters` reach the parquet reader, which skips row groups whose
+    * footer statistics exclude them; rows are still re-filtered above
+    * the scan. */
   private def parquetScanFor(spark: ClassicSession, readWritten: StructType,
-      files: Seq[FileEntry]) = {
+      files: Seq[FileEntry], filters: Array[Filter] = Array.empty) = {
     val index = new InMemoryFileIndex(spark, files.map(f => new Path(f.path)),
       Map.empty, Some(clean(readWritten)), userSpecifiedPartitionSpec = Some(PartitionSpec.emptySpec))
-    ParquetScanBuilder(spark, index, clean(readWritten), clean(readWritten),
-      new CaseInsensitiveStringMap(new java.util.HashMap[String, String]())).build()
+    val builder = ParquetScanBuilder(spark, index, clean(readWritten), clean(readWritten),
+      new CaseInsensitiveStringMap(new java.util.HashMap[String, String]()))
+    builder.build().copy(pushedFilters = builder.pushDataFilters(filters))
+  }
+
+  /** The filters that may be evaluated against files of written schema
+    * `sid`: every column they reference is stored there under the same
+    * name, field id and type as in the current schema. A renamed, retyped
+    * or dropped-and-re-added column keeps its filter above the scan only. */
+  private def filtersFor(table: LakeTable, sid: Int, filters: Array[Filter]): Array[Filter] = {
+    if (filters.isEmpty) return filters
+    val cur = table.schema
+    val written = table.schemaFor(sid)
+    def same(name: String): Boolean =
+      (cur.fields.find(_.name == name), written.fields.find(_.name == name)) match {
+        case (Some(c), Some(w)) =>
+          graft.format.FieldIds.of(c) == graft.format.FieldIds.of(w) && c.dataType == w.dataType
+        case _ => false
+      }
+    filters.filter(_.references.forall(same))
   }
 
   def plan(spark: ClassicSession, table: LakeTable, files: Seq[FileEntry],
@@ -263,6 +311,7 @@ private[streaming] object LakeDsv2 {
   def planPartitions(spark: ClassicSession, table: LakeTable, files: Seq[FileEntry],
       out: StructType): Array[InputPartition] = {
     if (files.isEmpty) return Array.empty
+    graft.scan.TableScan.ensureReadConf(spark)
     val outIds = outWithIds(table, out)
     val parts = Vector.newBuilder[InputPartition]
     files.groupBy(_.schemaId).toSeq.sortBy(_._1).foreach { case (sid, fs) =>
@@ -278,14 +327,14 @@ private[streaming] object LakeDsv2 {
     * costs O(schemas), never O(files). Any file set planned from the
     * same snapshot is a subset of these groups. */
   def readerFactory(spark: ClassicSession, table: LakeTable,
-      out: StructType): PartitionReaderFactory = {
+      out: StructType, filters: Array[Filter]): PartitionReaderFactory = {
     val outIds = outWithIds(table, out)
     val factories = Map.newBuilder[Int, PartitionReaderFactory]
     val projections = Map.newBuilder[Int, Seq[Expression]]
     table.metadata.schemas.keys.map(_.toInt).toSeq.sorted.foreach { sid =>
       val readWritten = readWrittenFor(table, sid, outIds)
-      factories += sid ->
-        parquetScanFor(spark, readWritten, Seq.empty).toBatch.createReaderFactory()
+      factories += sid -> parquetScanFor(spark, readWritten, Seq.empty,
+        filtersFor(table, sid, filters)).toBatch.createReaderFactory()
       if (clean(readWritten) != clean(outIds))
         projections += sid -> boundEvolveExprs(spark, readWritten, outIds)
     }
@@ -323,10 +372,24 @@ private[streaming] case object EmptyReaderFactory extends PartitionReaderFactory
 /** Routes each partition to its schema group's parquet factory and, for
   * groups written under an older schema, applies the bound field-id
   * projection per row (built lazily executor-side — UnsafeProjection
-  * itself is not serializable, the expressions are). */
+  * itself is not serializable, the expressions are). When no group needs
+  * a projection, the parquet factories' columnar batches pass through
+  * as they are; Spark needs one mode for all partitions of a scan, so a
+  * single projected group makes every group row-based. */
 private[streaming] final case class GroupReaderFactory(
     factories: Map[Int, PartitionReaderFactory],
     projections: Map[Int, Seq[Expression]]) extends PartitionReaderFactory {
+
+  override def supportColumnarReads(p: InputPartition): Boolean = {
+    val sgp = p.asInstanceOf[SchemaGroupPartition]
+    projections.isEmpty && factories(sgp.schemaId).supportColumnarReads(sgp.inner)
+  }
+
+  override def createColumnarReader(p: InputPartition):
+      PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val sgp = p.asInstanceOf[SchemaGroupPartition]
+    factories(sgp.schemaId).createColumnarReader(sgp.inner)
+  }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val sgp = p.asInstanceOf[SchemaGroupPartition]
@@ -343,14 +406,14 @@ private[streaming] final case class GroupReaderFactory(
   }
 }
 
-private[streaming] final class LakeDsv2Table(location: String,
-    changes: Boolean = false) extends Table
+private[graft] final class LakeDsv2Table(location: String,
+    changes: Boolean = false, loaded: Option[LakeTable] = None) extends Table
     with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  private val table = LakeTable.load(location)
+  private val table = loaded.getOrElse(LakeTable.load(location))
 
   override def name(): String = s"graft-lake:$location"
   override def schema(): StructType = {
-    val base = LakeDsv2.clean(table.schema)
+    val base = LakeDsv2.asNullable(LakeDsv2.clean(table.schema)).asInstanceOf[StructType]
     if (changes) LakeDsv2.withChangeType(base) else base
   }
   override def capabilities(): java.util.Set[TableCapability] =
@@ -528,7 +591,7 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
     * Spark may create (pre- and post-runtime-filter) hand out this same
     * factory. */
   private lazy val sharedFactory: PartitionReaderFactory =
-    LakeDsv2.readerFactory(ClassicSession.active, tableSnap, out)
+    LakeDsv2.readerFactory(ClassicSession.active, tableSnap, out, pushed)
 
   /** planFiles memoized per pred state: supportCompletePushDown /
     * pushAggregation / estimateStatistics / partition planning would
@@ -589,9 +652,14 @@ private[streaming] final class LakeScan(location: String, outSchema: StructType,
   }
   override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] = pushed
 
-  // changes mode emits the full row + _change_type; Spark projects above
+  // changes mode emits the full row + _change_type; Spark projects above.
+  // Spark may hand back nested-pruned structs; the readers project whole
+  // top-level columns, so the scan reads and declares those (Spark then
+  // extracts the nested fields above the scan)
   override def pruneColumns(required: StructType): Unit =
-    if (!changes) out = required
+    if (!changes)
+      out = StructType(required.fields.map(f =>
+        outSchema.fields.find(_.name == f.name).getOrElse(f)))
 
   override def build(): Scan = this
   override def readSchema(): StructType = out

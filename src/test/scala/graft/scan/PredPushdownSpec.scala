@@ -83,6 +83,51 @@ class PredPushdownSpec extends SparkSpec {
     }
   }
 
+  test("BETWEEN compiles to a range; NOT BETWEEN and NULL bounds stay 3VL-exact") {
+    assert(PredSql.compile(spark, "x BETWEEN 2 AND 5") === And(Ge("x", 2), Le("x", 5)))
+    assert(PredSql.compile(spark, "x NOT BETWEEN 2 AND 5") === Or(Lt("x", 2), Gt("x", 5)))
+    assert(PredSql.compile(spark, "NOT (x BETWEEN 2 AND 5)") === Or(Lt("x", 2), Gt("x", 5)))
+    val sqls = Seq("x BETWEEN 2 AND 5", "x NOT BETWEEN 2 AND 5", "x BETWEEN -3 AND 1",
+      "x BETWEEN NULL AND 5", "x NOT BETWEEN NULL AND 5", "x BETWEEN 2 AND NULL",
+      "x NOT BETWEEN 2 AND NULL", "s BETWEEN 'a' AND 'b'")
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.selectExpr("concat(coalesce(cast(x as string),'_'), '/', coalesce(s,'_')) AS r")
+        .collect().map(_.getString(0)).sorted.toSeq
+    sqls.foreach { sql =>
+      val p = PredSql.compile(spark, sql)
+      assert(!p.isInstanceOf[Opaque], s"$sql stayed opaque")
+      val exact = corpus.filter(coalesce(expr(sql), lit(false)))
+      assert(ids(corpus.filter(coalesce(Pred.toColumn(p), lit(false)))) === ids(exact), sql)
+      assert(exact.filter(not(coalesce(Pred.toColumn(Pred.mayTrue(p)), lit(false)))).count() == 0,
+        s"mayTrue dropped matching rows for $sql")
+      val kept = corpus.filter(not(coalesce(expr(sql), lit(false))))
+      assert(kept.filter(not(coalesce(Pred.toColumn(Pred.notTrue(p)), lit(false)))).count() == 0,
+        s"notTrue dropped kept rows for $sql")
+    }
+  }
+
+  test("BETWEEN prunes files for LakeEngine.read and scopes DML") {
+    import graft.format._
+    val dir = java.nio.file.Files.createTempDirectory("graft-between-").toString
+    val catalog = new LakeCatalog(dir)
+    val engine = new graft.commands.LakeEngine(spark, catalog)
+    val df = spark.range(0, 6000).select(col("id").as("k"), (col("id") % 7).as("v"))
+    val t = catalog.createTable("t", df.schema, sortOrder = Seq(SortField("k")),
+      properties = Map("write.max-records-per-file" -> "1000"))
+    engine.insert(t, df)
+    val m = engine.scan(t, "k BETWEEN 2100 AND 2200").metrics()
+    assert(m.totalFiles == 6 && m.matchedFiles == 1, s"$m")
+    assert(engine.read("t", "k BETWEEN 2100 AND 2200").count() == 101)
+    // NOT BETWEEN keeps both ends: only a file wholly inside the range is pruned
+    val outside = engine.scan(t, "k NOT BETWEEN 1000 AND 1999").metrics()
+    assert(outside.matchedFiles == 5, s"$outside")
+    val c = engine.delete(t, "k BETWEEN 2100 AND 2200")
+    assert(c.removedFiles == 1 && c.removedRecords - c.addedRecords == 101, s"$c")
+    val after = LakeTable.load(t.location)
+    assert(engine.scan(after).toDF().count() == 5899)
+    assert(engine.scan(after).toDF().filter(col("k").between(2100, 2200)).count() == 0)
+  }
+
   test("DELETE on a never-true NOT(col = NULL) condition is a no-op, not a wipe") {
     import graft.format._
     val dir = java.nio.file.Files.createTempDirectory("graft-nulllit-").toString
